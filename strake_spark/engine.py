@@ -1,12 +1,17 @@
 """StrakeEngine — the governed SparkSession wrapper.
 
 Mirrors the reference's FederationEngine lifecycle
-(crates/runtime/src/federation.rs:326-490) re-expressed on Spark:
+(crates/runtime/src/federation.rs:326-490) re-expressed on Spark as ONE
+envelope, ``StrakeEngine._governed``, that ``execute`` and ``profile``
+both run in:
 
-    gate (read-only) -> cache probe -> spark.sql (Catalyst optimize)
-    -> defensive limit -> cost gate -> timed execution -> cache put
+    admission -> breaker grants -> gate -> spark.sql (Catalyst optimize)
+    -> defensive limit -> cost gate -> cache probe -> timed execution
+    -> max_output_rows -> cache put -> query log
 
-and the Python connection surface (python/strake/__init__.pyi:28-68:
+Breakers judge sources, not callers: query/auth-category failures
+(STRAKE-2xxx/4xxx, timeouts excepted) never count against a source.
+Also the Python connection surface (python/strake/__init__.pyi:28-68:
 sql/describe/trace/explain_tree/list_sources).
 """
 
@@ -19,7 +24,8 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 
 from strake_spark.config import EngineConfig, load_config
-from strake_spark.errors import QueryRejected
+from strake_spark.convert import classify_exception
+from strake_spark.errors import ErrorCategory, QueryRejected, QueryTimeout, StrakeError
 from strake_spark.governance.gate import ensure_select, sanitize_identifier
 from strake_spark.governance.limits import (
     apply_defensive_limit,
@@ -27,6 +33,7 @@ from strake_spark.governance.limits import (
     plan_stats,
     run_with_timeout,
 )
+from strake_spark.reliability import CircuitBreaker, CircuitOpen, ConcurrencyGovernor
 from strake_spark.session import build_session
 from strake_spark.sources.registry import register_source
 
@@ -73,8 +80,6 @@ class StrakeEngine:
             from strake_spark.cache import ResultCache
 
             self._cache = ResultCache(self.spark, self.config.cache)
-        from strake_spark.reliability import CircuitBreaker, ConcurrencyGovernor
-
         self._governor = ConcurrencyGovernor(
             self.config.global_connection_budget,
             user_slots=getattr(self.config, "user_slots", None),
@@ -115,8 +120,6 @@ class StrakeEngine:
 
     # ------------------------------------------------------------- sources
     def register(self, source_cfg) -> list[str]:
-        from strake_spark.reliability import CircuitBreaker
-
         views = register_source(self.spark, source_cfg)
         self._views[source_cfg.name] = views
         from strake_spark.governance.contracts import STRICT_VIEWS
@@ -242,8 +245,6 @@ class StrakeEngine:
             # STRAKE-2002/2003/2004 from eng.sql and every surface
             # built on it (Flight get_flight_info plans here). Anything
             # without a Spark error condition propagates unchanged.
-            from strake_spark.convert import classify_exception
-
             classified = classify_exception(e)
             if classified is not None:
                 raise classified from e
@@ -263,29 +264,21 @@ class StrakeEngine:
         """Full governed execution -> pyarrow.Table (zero-copy boundary,
         like reference docs/python-api.md:110-122).
 
-        Admission (global budget + per-source caps) and per-source
-        circuit breakers wrap the whole query, the reference's
-        granularity (it wraps each source's TableProvider; one grant
-        per query per source).
+        Runs in the one query envelope (``_governed``) with the result
+        cache: admission (global budget + per-source caps), per-source
+        circuit breakers (one grant per query per source, the
+        reference's granularity), the query timeout, STRAKE
+        classification of run-time failures and ``max_output_rows``.
 
         ``traceparent`` (W3C trace-context header) joins the caller's
         distributed trace; the query span + plan/run children land in
         the tracer (reference telemetry.rs wraps queries the same way).
         """
-        with self.tracer.span(
-            "query.execute",
-            {"db.statement.length": len(query), "enduser.id": user or ""},
-            traceparent=traceparent,
-        ) as root:
-            self._warnings_local.value = []
-            table, cached = self._execute_traced(query, user, params, root)
-            root.set_attribute("strake.cache_hit", cached)
-            root.set_attribute("strake.rows", table.num_rows)
-            warnings = self._query_warnings(query, cached)
-            self._warnings_local.value = warnings
-            if warnings:
-                root.set_attribute("strake.warnings", len(warnings))
-            return table
+        _, table, _ = self._governed(
+            "query.execute", query, user, params, traceparent,
+            lambda d: d.toArrow(), use_cache=True,
+        )
+        return table
 
     def last_warnings(self) -> list[str]:
         """Non-fatal warnings of this thread's most recent execute()
@@ -343,64 +336,84 @@ class StrakeEngine:
                 out.add(name.lower())
         return tuple(sorted(out))
 
-    def _execute_traced(self, query, user, params, root):
+    def _governed(self, span_name, query, user, params, traceparent, action, use_cache):
+        """The one governed query envelope (lifecycle in the module
+        docstring): ``action(df)`` runs under the timeout unless the
+        cache answers. Breaker rule: a CircuitOpen, or a query/auth-
+        category failure (STRAKE-2xxx/4xxx) other than QueryTimeout, is
+        the caller's and gives the grants back with no verdict; every
+        other failure counts against each touched source. Returns
+        ``(df, result, cache_hit)``."""
         limits = self.config.query_limits
+        cache = self._cache if use_cache else None
         started = time.time()
-        sources = self._touched_sources(query)
-        root.set_attribute("strake.sources", ",".join(sources))
-        breakers = [self._breakers[s] for s in sources if s in self._breakers]
-        with self._governor.admit(sources, user=user):
-            for b in breakers:
-                b.acquire()
-            try:
-                with self.tracer.span("query.plan") as plan_span:
-                    df = self.sql(query, user=user, params=params)
-                    pushed = self._last_pushdown
-                    plan_span.set_attribute("strake.pushdown", pushed is not None)
-                    if pushed is not None:
-                        plan_span.set_attribute(
-                            "strake.pushdown.summary",
-                            str(getattr(pushed, "rewritten_sql", ""))[:500],
-                        )
-                hit = self._cache.get(df, user) if self._cache is not None else None
-                if hit is not None:
-                    table = hit
-                else:
-                    with self.tracer.span("query.run"):
-                        table = run_with_timeout(
-                            df, lambda d: d.toArrow(), limits.query_timeout_seconds
-                        )
-            except QueryRejected:
-                for b in breakers:
-                    b.release()  # governance rejection, not a source fault
-                raise
-            except Exception as e:
-                for b in breakers:
-                    b.record(False)
-                # Spark analysis/parse failures re-raise classified
-                # onto the stable code contract (convert.py, reference
-                # convert.rs): API users branch on STRAKE-2002/2003/...
-                # instead of matching Spark's message prose. Anything
-                # without a Spark error condition propagates unchanged.
-                from strake_spark.convert import classify_exception
-
-                classified = classify_exception(e)
-                if classified is not None:
-                    raise classified from e
-                raise
-            for b in breakers:
-                b.record(True)
-        if hit is not None:
-            self._log_query(query, user, started, cached=True)
-            return hit, True
-        if limits.max_output_rows and table.num_rows > limits.max_output_rows:
-            raise QueryRejected(
-                f"result has {table.num_rows} rows > max_output_rows {limits.max_output_rows}"
-            )
-        if self._cache is not None:
-            self._cache.put(df, user, table)
-        self._log_query(query, user, started, cached=False)
-        return table, False
+        with self.tracer.span(
+            span_name,
+            {"db.statement.length": len(query), "enduser.id": user or ""},
+            traceparent=traceparent,
+        ) as root:
+            self._warnings_local.value = []
+            sources = self._touched_sources(query)
+            root.set_attribute("strake.sources", ",".join(sources))
+            held: list = []
+            with self._governor.admit(sources, user=user):
+                try:
+                    for s in sources:
+                        if s in self._breakers:
+                            self._breakers[s].acquire()
+                            held.append(self._breakers[s])
+                    with self.tracer.span("query.plan") as plan_span:
+                        df = self.sql(query, user=user, params=params)
+                        pushed = self._last_pushdown
+                        plan_span.set_attribute("strake.pushdown", pushed is not None)
+                        if pushed is not None:
+                            plan_span.set_attribute(
+                                "strake.pushdown.summary",
+                                str(getattr(pushed, "rewritten_sql", ""))[:500],
+                            )
+                    result = cache.get(df, user) if cache is not None else None
+                    hit = result is not None
+                    if not hit:
+                        with self.tracer.span("query.run"):
+                            result = run_with_timeout(
+                                df, action, limits.query_timeout_seconds
+                            )
+                except Exception as e:
+                    # run-time Spark failures classify onto the stable
+                    # code contract (convert.py, reference convert.rs),
+                    # like planning failures already do in sql()
+                    err = classify_exception(e) or e
+                    caller_fault = isinstance(err, CircuitOpen) or (
+                        isinstance(err, StrakeError)
+                        and not isinstance(err, QueryTimeout)
+                        and err.code.category in (ErrorCategory.QUERY, ErrorCategory.AUTH)
+                    )
+                    for b in held:
+                        if caller_fault:
+                            b.release()
+                        else:
+                            b.record(False)
+                    if err is e:
+                        raise
+                    raise err from e
+                for b in held:
+                    b.record(True)
+            # an Arrow table, or execute_plan_only's row count
+            rows = getattr(result, "num_rows", result)
+            if not hit and limits.max_output_rows and rows > limits.max_output_rows:
+                raise QueryRejected(
+                    f"result has {rows} rows > max_output_rows {limits.max_output_rows}"
+                )
+            if cache is not None and not hit:
+                cache.put(df, user, result)
+            self._log_query(query, user, started, cached=hit)
+            root.set_attribute("strake.cache_hit", hit)
+            root.set_attribute("strake.rows", rows)
+            warnings = self._query_warnings(query, hit)
+            self._warnings_local.value = warnings
+            if warnings:
+                root.set_attribute("strake.warnings", len(warnings))
+        return df, result, hit
 
     # ---------------------------------------------------------- inspection
     def explain_tree(self, query: str) -> str:
@@ -628,12 +641,12 @@ class StrakeEngine:
         crates/runtime/src/query/trace.rs:7-72). AQE wrappers are
         unwrapped so the report shows the plan that actually ran.
 
-        Runs inside the SAME envelope as execute(): concurrency-governor
-        admission, per-source circuit breakers, and the query timeout.
-        The plan is driven by a JVM-side count over the executed plan's
-        own RDD (plans/tree.py execute_plan_only), so no result rows are
-        ever materialized on the driver; the counted cardinality is
-        still checked against max_output_rows for parity with execute().
+        Runs in the same envelope as execute() (``_governed``), without
+        the result cache: admission, the breaker rule, the timeout,
+        STRAKE classification, max_output_rows and the query log. The
+        plan is driven by a JVM-side count over the executed plan's own
+        RDD (plans/tree.py execute_plan_only), so no result rows are
+        ever materialized on the driver.
         """
         from strake_spark.plans.tree import (
             execute_plan_only,
@@ -641,41 +654,11 @@ class StrakeEngine:
             runtime_profile,
         )
 
-        limits = self.config.query_limits
-        sources = self._touched_sources(query)
-        breakers = [self._breakers[s] for s in sources if s in self._breakers]
-        with self.tracer.span(
-            "query.profile",
-            {"db.statement.length": len(query), "enduser.id": user or ""},
-            traceparent=traceparent,
-        ) as root:
-            root.set_attribute("strake.sources", ",".join(sources))
-            with self._governor.admit(sources, user=user):
-                for b in breakers:
-                    b.acquire()
-                try:
-                    with self.tracer.span("query.plan"):
-                        df = self.sql(query, user=user)
-                    with self.tracer.span("query.run"):
-                        n = run_with_timeout(
-                            df, execute_plan_only, limits.query_timeout_seconds
-                        )
-                except QueryRejected:
-                    for b in breakers:
-                        b.release()  # governance rejection, not a source fault
-                    raise
-                except Exception:
-                    for b in breakers:
-                        b.record(False)
-                    raise
-                for b in breakers:
-                    b.record(True)
-            if limits.max_output_rows and n > limits.max_output_rows:
-                raise QueryRejected(
-                    f"result has {n} rows > max_output_rows {limits.max_output_rows}"
-                )
-            prof = runtime_profile(df)
-            root.set_attribute("strake.rows", n)
+        df, n, _ = self._governed(
+            "query.profile", query, user, None, traceparent,
+            execute_plan_only, use_cache=False,
+        )
+        prof = runtime_profile(df)
         return {
             "query": query,
             "rows": n,

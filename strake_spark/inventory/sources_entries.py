@@ -585,7 +585,6 @@ def source_grpc(spark: SparkSession, sf_dir: str) -> DataFrame:
             endpoint=f"127.0.0.1:{srv.port}",
             method="/strake.Nation/List",
             fields="1:n_nationkey:int64,2:n_name:string,3:n_regionkey:int64",
-            transport="h2c",
         )
         .load()
     )

@@ -19,7 +19,7 @@ seccomp").
 
 Environment gate: Landlock needs kernel CONFIG_SECURITY_LANDLOCK with
 the LSM active; this container returns ENOSYS, so enforcement is
-probe-gated exactly like grpcio/sftp — the degrade path (apply fails,
+probe-gated exactly like the optional sftp client — the degrade path (apply fails,
 sandbox keeps its rlimits/netns/seccomp hardening) is the path THIS
 environment exercises for real, and the enforcement tests skip unless
 ``landlock_available()``.

@@ -136,6 +136,42 @@ class RemoteEngine:
     def _options(self):
         return self._fl.FlightCallOptions(headers=list(self._headers))
 
+    @staticmethod
+    def _command(query: str, user: str | None = None, params: dict[str, Any] | None = None) -> bytes:
+        """Flight command for a statement: raw SQL, or the JSON envelope
+        when a principal or bound parameters ride along."""
+        if user is not None or params is not None:
+            return json.dumps({"sql": query, "user": user, "params": params}).encode()
+        return query.encode()
+
+    def _read(self, query, user, params, whole: bool):
+        """get_flight_info, then do_get per endpoint: yields each
+        endpoint's whole table (``whole``) or its record batches as
+        they arrive. Per-query warnings arrive as schema metadata on
+        each endpoint's stream and are unioned into last_warnings() in
+        arrival order, first-seen wins."""
+        fl = self._fl
+        try:
+            info = self._client.get_flight_info(
+                fl.FlightDescriptor.for_command(self._command(query, user, params)),
+                self._options(),
+            )
+            warnings: list[str] = []
+            self._last_warnings = warnings  # filled as endpoints stream
+            for ep in info.endpoints:
+                reader = self._client.do_get(ep.ticket, self._options())
+                raw = (reader.schema.metadata or {}).get(b"strake.warnings")
+                for w in json.loads(raw.decode()) if raw else []:
+                    if w not in warnings:
+                        warnings.append(w)
+                if whole:
+                    yield reader.read_all()
+                else:
+                    for chunk in reader:
+                        yield chunk.data
+        except fl.FlightError as e:
+            raise _translate(e) or e from None
+
     def execute(
         self,
         query: str,
@@ -149,37 +185,10 @@ class RemoteEngine:
         token auth it selects the RLS/masking principal, same as the
         embedded engine's ``execute(user=...)``.
         """
-        if user is not None or params is not None:
-            cmd = json.dumps({"sql": query, "user": user, "params": params}).encode()
-        else:
-            cmd = query.encode()
-        fl = self._fl
-        try:
-            info = self._client.get_flight_info(
-                fl.FlightDescriptor.for_command(cmd), self._options()
-            )
-            out = []
-            # per-query warnings arrive as schema metadata on EACH
-            # endpoint's stream; collect before concat (pyarrow does
-            # not promise metadata survives concat_tables) and union
-            # across endpoints in arrival order, first-seen wins
-            warnings: list[str] = []
-            for ep in info.endpoints:
-                t = self._client.do_get(ep.ticket, self._options()).read_all()
-                md = t.schema.metadata or {}
-                raw = md.get(b"strake.warnings")
-                if raw:
-                    for w in json.loads(raw.decode()):
-                        if w not in warnings:
-                            warnings.append(w)
-                out.append(t)
-            import pyarrow as pa
+        import pyarrow as pa
 
-            table = pa.concat_tables(out) if len(out) != 1 else out[0]
-            self._last_warnings = warnings
-            return table
-        except fl.FlightError as e:
-            raise _translate(e) or e from None
+        out = list(self._read(query, user, params, whole=True))
+        return pa.concat_tables(out) if len(out) != 1 else out[0]
 
     def last_warnings(self) -> list[str]:
         """Non-fatal warnings of the most recent execute() — cache
@@ -205,28 +214,7 @@ class RemoteEngine:
         iter_batches as the large-result path, backend/remote.rs:54
         note). Governed identically — the server streams from the same
         do_get path."""
-        if user is not None or params is not None:
-            cmd = json.dumps({"sql": query, "user": user, "params": params}).encode()
-        else:
-            cmd = query.encode()
-        fl = self._fl
-        try:
-            info = self._client.get_flight_info(
-                fl.FlightDescriptor.for_command(cmd), self._options()
-            )
-            warnings: list[str] = []
-            self._last_warnings = warnings  # filled as endpoints stream
-            for ep in info.endpoints:
-                reader = self._client.do_get(ep.ticket, self._options())
-                md = reader.schema.metadata or {}
-                raw = md.get(b"strake.warnings")
-                for w in json.loads(raw.decode()) if raw else []:
-                    if w not in warnings:
-                        warnings.append(w)
-                for chunk in reader:
-                    yield chunk.data
-        except fl.FlightError as e:
-            raise _translate(e) or e from None
+        return self._read(query, user, params, whole=False)
 
     def schema(self, query: str):
         """Plan-only: the result schema of ``query`` without executing
@@ -234,7 +222,7 @@ class RemoteEngine:
         fl = self._fl
         try:
             info = self._client.get_flight_info(
-                fl.FlightDescriptor.for_command(query.encode()), self._options()
+                fl.FlightDescriptor.for_command(self._command(query)), self._options()
             )
             return info.schema
         except fl.FlightError as e:

@@ -268,6 +268,22 @@ class _Handler(BaseHTTPRequestHandler):
             return self._impact(body)
         return self._send(404, _error_body(message=f"no route {path}"))
 
+    def _reply(self, call, warnings: bool = False) -> None:
+        """Send ``call()``'s result as a success body, or its failure as
+        a 400 error body (a StrakeError carries its own code; Spark
+        conditions are classified, anything else is STRAKE-9999).
+        ``warnings`` adds this thread's per-query non-fatal warnings
+        (reference QueryResponse carries a warnings list,
+        warnings.rs:19-40): cache hits as "x-strake-cache: hit", drift
+        as STRAKE-2009..2011-coded lines."""
+        try:
+            body = {"status": "success", "data": call(), "message": None}
+        except Exception as e:
+            return self._send(400, _error_body(e, trunc=500))
+        if warnings:
+            body["warnings"] = self.engine.last_warnings()
+        self._send(200, body)
+
     def _explain(self, body: dict) -> None:
         """Plan tree with pushdown markers, no execution (the engine's
         explain_tree / trace surface over HTTP)."""
@@ -276,13 +292,7 @@ class _Handler(BaseHTTPRequestHandler):
             return self._send(
                 400, _error_body(message="missing 'sql'", code=ErrorCode.MISSING_REQUIRED_FIELD)
             )
-        try:
-            tree = self.engine.explain_tree(sql)
-        except StrakeError as e:
-            return self._send(400, _error_body(e))
-        except Exception as e:
-            return self._send(400, _error_body(e, trunc=500))
-        self._send(200, {"status": "success", "data": {"plan": tree}, "message": None})
+        self._reply(lambda: {"plan": self.engine.explain_tree(sql)})
 
     def _lineage(self, body: dict) -> None:
         """Column-level lineage over HTTP (engine.lineage): no
@@ -292,28 +302,16 @@ class _Handler(BaseHTTPRequestHandler):
             return self._send(
                 400, _error_body(message="missing 'sql'", code=ErrorCode.MISSING_REQUIRED_FIELD)
             )
-        try:
-            lin = self.engine.lineage(sql)
-        except StrakeError as e:
-            return self._send(400, _error_body(e))
-        except Exception as e:
-            return self._send(400, _error_body(e, trunc=500))
-        self._send(200, {"status": "success", "data": lin, "message": None})
+        self._reply(lambda: self.engine.lineage(sql))
 
     def _contracts(self, body: dict) -> None:
         """Contract validation over HTTP (engine.validate_contracts):
         schema errors + row-rule violation counts; optional
         sample_fraction keeps the scan bounded at scale."""
-        try:
-            rep = self.engine.validate_contracts(
-                check_data=bool(body.get("check_data", True)),
-                sample_fraction=body.get("sample_fraction"),
-            )
-        except StrakeError as e:
-            return self._send(400, _error_body(e))
-        except Exception as e:
-            return self._send(400, _error_body(e, trunc=500))
-        self._send(200, {"status": "success", "data": rep, "message": None})
+        self._reply(lambda: self.engine.validate_contracts(
+            check_data=bool(body.get("check_data", True)),
+            sample_fraction=body.get("sample_fraction"),
+        ))
 
     def _masking_audit(self, body: dict, claims: dict) -> None:
         """Masked-column audit for a statement (engine.masking_audit):
@@ -326,13 +324,7 @@ class _Handler(BaseHTTPRequestHandler):
                 400,
                 _error_body(message="missing 'sql' or 'user'", code=ErrorCode.MISSING_REQUIRED_FIELD),
             )
-        try:
-            rep = self.engine.masking_audit(sql, user)
-        except StrakeError as e:
-            return self._send(400, _error_body(e))
-        except Exception as e:
-            return self._send(400, _error_body(e, trunc=500))
-        self._send(200, {"status": "success", "data": rep, "message": None})
+        self._reply(lambda: self.engine.masking_audit(sql, user))
 
     def _impact(self, body: dict) -> None:
         """Reverse lineage (engine.impact): which logged statements read
@@ -352,13 +344,7 @@ class _Handler(BaseHTTPRequestHandler):
                     code=ErrorCode.MISSING_REQUIRED_FIELD,
                 ),
             )
-        try:
-            rep = self.engine.impact(column, queries=body.get("queries"))
-        except StrakeError as e:
-            return self._send(400, _error_body(e))
-        except Exception as e:
-            return self._send(400, _error_body(e, trunc=500))
-        self._send(200, {"status": "success", "data": rep, "message": None})
+        self._reply(lambda: self.engine.impact(column, queries=queries))
 
     def _profile(self, body: dict, claims: dict) -> None:
         """EXPLAIN ANALYZE over HTTP: executes (governed, same principal
@@ -372,13 +358,7 @@ class _Handler(BaseHTTPRequestHandler):
         # same W3C trace-context propagation as _query: a profile run
         # joins the caller's distributed trace
         traceparent = self.headers.get("traceparent")
-        try:
-            report = self.engine.profile(sql, user=user, traceparent=traceparent)
-        except StrakeError as e:
-            return self._send(400, _error_body(e))
-        except Exception as e:
-            return self._send(400, _error_body(e, trunc=500))
-        self._send(200, {"status": "success", "data": report, "message": None})
+        self._reply(lambda: self.engine.profile(sql, user=user, traceparent=traceparent))
 
     # ------------------------------------------------------------ handlers
     # counters grow monotonically; everything else is a point-in-time gauge
@@ -526,26 +506,11 @@ class _Handler(BaseHTTPRequestHandler):
         # W3C trace-context propagation: a caller-supplied traceparent
         # joins the query span to the caller's distributed trace
         traceparent = self.headers.get("traceparent")
-        try:
-            table = self.engine.execute(
+        self._reply(
+            lambda: self.engine.execute(
                 sql, user=user, params=body.get("params"), traceparent=traceparent
-            )
-        except StrakeError as e:
-            return self._send(400, _error_body(e))
-        except Exception as e:  # analysis errors etc.
-            return self._send(400, _error_body(e, trunc=500))
-        self._send(
-            200,
-            {
-                "status": "success",
-                "data": table.to_pylist(),
-                "message": None,
-                # per-query non-fatal warnings (reference QueryResponse
-                # carries a warnings list, warnings.rs:19-40): cache
-                # hits as "x-strake-cache: hit", drift as
-                # STRAKE-2009..2011-coded lines
-                "warnings": self.engine.last_warnings(),
-            },
+            ).to_pylist(),
+            warnings=True,
         )
 
     def _validate(self, body: dict) -> None:

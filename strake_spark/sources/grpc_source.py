@@ -7,13 +7,11 @@ Spark design: a Python DataSource whose reader calls a
 unary/server-streaming method and decodes response messages through a
 descriptor set (the compiled ``FileDescriptorSet`` bytes the reference
 also consumes). The descriptor-driven decode path (proto wire -> dict
-rows -> Arrow) is pure-python; the TRANSPORT (r15) prefers ``grpcio``
-when installed and otherwise falls back to the jar-free cleartext
-HTTP/2 client (sources/h2grpc.py — RFC 7540 framing + RFC 7541 HPACK
-over stdlib sockets), tested against a live in-process h2c gRPC
-server. TLS endpoints still require grpcio (``transport: grpcio``
-fails fast when it is absent). Each Spark task opens its own
-connection — no driver funnel at scale.
+rows -> Arrow) is pure-python, and so is the one TRANSPORT: the
+jar-free HTTP/2 client (sources/h2grpc.py — RFC 7540 framing + RFC 7541
+HPACK over stdlib sockets), cleartext h2c for ``grpc://`` and TLS +
+ALPN h2 for ``grpcs://``, tested against live in-process gRPC servers.
+Each Spark task opens its own connection — no driver funnel at scale.
 """
 
 from __future__ import annotations
@@ -28,6 +26,7 @@ from pyspark.sql.types import StructType
 
 from strake_spark.config import SourceConfig
 from strake_spark.errors import SourceError
+from strake_spark.sources.h2grpc import unary_stream
 from strake_spark.sources.registry import source_type
 
 FORMAT_NAME = "strake_grpc"
@@ -169,44 +168,10 @@ class GrpcReader(DataSourceReader):
         endpoint = self.options["endpoint"]
         method = self.options["method"]  # /package.Service/Method
         request = bytes.fromhex(self.options.get("request_hex", ""))
-        # transport: auto (grpcio if installed, else the jar-free
-        # stdlib transport — h2c for grpc://, ssl+ALPN h2 for
-        # grpcs://), grpcio (fail fast when absent), or h2c
-        transport = self.options.get("transport", "auto")
-        tls_root_certs = self.options.get("tls_root_certs") or None
-        stream = None
-        if transport in ("auto", "grpcio"):
-            try:
-                import grpc
-
-                if endpoint.startswith("grpcs://"):
-                    target = endpoint[len("grpcs://") :]
-                    if tls_root_certs:
-                        with open(tls_root_certs, "rb") as f:
-                            creds = grpc.ssl_channel_credentials(f.read())
-                    else:
-                        creds = grpc.ssl_channel_credentials()
-                    channel = grpc.secure_channel(target, creds)
-                else:
-                    target = endpoint.removeprefix("grpc://")
-                    channel = grpc.insecure_channel(target)
-                stream = channel.unary_stream(
-                    method,
-                    request_serializer=lambda b: b,
-                    response_deserializer=lambda b: b,
-                )(request)
-            except ImportError as e:
-                if transport == "grpcio":
-                    raise SourceError(
-                        "transport 'grpcio' requested but grpcio is not "
-                        "installed"
-                    ) from e
-        if stream is None:  # stdlib transport, or auto without grpcio
-            from strake_spark.sources.h2grpc import unary_stream
-
-            stream = unary_stream(
-                endpoint, method, request, tls_root_certs=tls_root_certs
-            )
+        stream = unary_stream(
+            endpoint, method, request,
+            tls_root_certs=self.options.get("tls_root_certs") or None,
+        )
         names = [f.name for f in self.schema.fields]
         for raw in stream:
             row = decode_message(raw, fields)
@@ -258,7 +223,6 @@ def register_grpc_source(spark: SparkSession, cfg: SourceConfig) -> list[str]:
             .option("method", str(tbl.options["method"]))
             .option("fields", str(tbl.options["fields"]))
             .option("request_hex", str(tbl.options.get("request_hex", "")))
-            .option("transport", str(tbl.options.get("transport", "auto")))
             .option("tls_root_certs", str(tbl.options.get("tls_root_certs", "")))
             .load()
         )

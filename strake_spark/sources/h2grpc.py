@@ -1,8 +1,8 @@
 """Jar-free gRPC transport over cleartext HTTP/2 (h2c, prior knowledge).
 
 Reference: crates/connectors/src/sources/grpc.rs:21-45 opens a tonic
-channel and issues unary/server-streaming calls; ``grpcio`` is not
-installable in this container, so this module implements the minimal
+channel and issues unary/server-streaming calls; this module is the
+one gRPC transport (no ``grpcio`` dependency) and implements the minimal
 client side of the public wire contract from the specs alone:
 
 - HTTP/2 framing (RFC 7540): connection preface, SETTINGS exchange +

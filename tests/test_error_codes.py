@@ -373,6 +373,27 @@ class TestFacades:
             )
         assert ei.value.code is ErrorCode.TYPE_MISMATCH
 
+    @pytest.mark.parametrize("surface", ["execute", "profile"])
+    @pytest.mark.parametrize(
+        "sql,cls,code",
+        [
+            # run-time failure: the cast fails while rows are produced
+            ("SELECT CAST(concat('x', n_nationkey) AS INT) AS v FROM ec_nation",
+             "EngineError", ErrorCode.TYPE_MISMATCH),
+            # gate rejection before planning
+            ("DROP TABLE ec_nation", "QueryRejected", ErrorCode.SYNTAX_ERROR),
+        ],
+    )
+    def test_execute_and_profile_classify_alike(self, engine, surface, sql, cls, code):
+        """execute() and profile() share one envelope, so a failure
+        surfaces as the same class and STRAKE code from either."""
+        import strake_spark.errors as errors
+
+        with pytest.raises(StrakeError) as ei:
+            getattr(engine, surface)(sql)
+        assert type(ei.value) is getattr(errors, cls)
+        assert ei.value.code is code
+
     def test_engine_error_crosses_flight_with_code(self, engine):
         import strake_spark as ss
         from strake_spark.errors import EngineError

@@ -3,7 +3,7 @@
 
 This container's kernel returns ENOSYS for the landlock syscalls, so
 the DEGRADE path is the one tested for real here (exactly the
-environment-gate discipline used for grpcio/sftp); the enforcement
+environment-gate discipline used for the optional sftp client); the enforcement
 tests run wherever ``landlock_available()`` is true."""
 
 from __future__ import annotations

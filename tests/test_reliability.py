@@ -193,6 +193,76 @@ class TestEngineIntegration:
         with pytest.raises(CircuitOpen):
             eng.execute("SELECT sum(x) AS s FROM bsrc_t")
 
+    @staticmethod
+    def _engine(spark, limits=None):
+        """Parquet sources ha (nation) and op (region), each breaker
+        replaced by a fast one: min_calls=2, cool-down 60 s on a manual
+        clock (``eng.clock[0]``)."""
+        import strake_spark as ss
+        from tests.conftest import SF_DIR
+
+        eng = ss.connect(
+            {
+                "sources": [
+                    {"name": "ha", "type": "parquet", "url": SF_DIR,
+                     "tables": [{"name": "nation"}]},
+                    {"name": "op", "type": "parquet", "url": SF_DIR,
+                     "tables": [{"name": "region"}]},
+                ],
+                "query_limits": limits or {},
+            },
+            spark=spark,
+        )
+        eng.clock = [0.0]
+        for name in ("ha", "op"):
+            eng._breakers[name] = CircuitBreaker(
+                name, BreakerConfig(window_size=2, min_calls=2, open_seconds=60),
+                clock=lambda: eng.clock[0],
+            )
+        return eng
+
+    def test_misspelled_columns_do_not_open_breaker(self, spark):
+        from strake_spark.errors import EngineError, ErrorCode
+
+        eng = self._engine(spark)
+        for _ in range(eng._breakers["ha"].config.min_calls):
+            with pytest.raises(EngineError) as ei:
+                eng.execute("SELECT n_nmae FROM ha_nation")
+            assert ei.value.code is ErrorCode.FIELD_NOT_FOUND
+        assert eng._breakers["ha"].state == "closed"
+        assert eng.execute("SELECT n_name FROM ha_nation").num_rows == 25
+
+    def test_over_budget_queries_do_not_open_breaker(self, spark):
+        from strake_spark.errors import BudgetExceeded, ErrorCode
+
+        eng = self._engine(spark, limits={"max_estimated_bytes": 10})
+        for _ in range(eng._breakers["ha"].config.min_calls):
+            with pytest.raises(BudgetExceeded) as ei:
+                eng.execute("SELECT n_name FROM ha_nation")
+            assert ei.value.code is ErrorCode.BUDGET_EXCEEDED
+        assert eng._breakers["ha"].state == "closed"
+        eng.config.query_limits.max_estimated_bytes = None
+        assert eng.execute("SELECT n_name FROM ha_nation").num_rows == 25
+
+    def test_open_second_source_releases_first_grant(self, spark):
+        """A CircuitOpen from the second source's breaker gives back the
+        trial grant already taken on the first (half-open) source."""
+        eng = self._engine(spark)
+        ha, op = eng._breakers["ha"], eng._breakers["op"]
+        ha.record(False)
+        ha.record(False)
+        eng.clock[0] = 61.0  # ha has cooled down to half-open ...
+        op.record(False)
+        op.record(False)  # ... while op has just opened
+        assert (ha.state, op.state) == ("half_open", "open")
+        with pytest.raises(CircuitOpen):
+            eng.execute(
+                "SELECT n_name FROM ha_nation JOIN op_region "
+                "ON n_regionkey = r_regionkey"
+            )
+        assert eng.execute("SELECT n_name FROM ha_nation").num_rows == 25
+        assert ha.state == "closed"
+
 
 class _FlakyHandler(BaseHTTPRequestHandler):
     fails_left = 2

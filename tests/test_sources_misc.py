@@ -1,5 +1,6 @@
 """Iceberg config plumbing (gated on the runtime jar) and the gRPC
-descriptor-driven proto decode path (transport gated on grpcio)."""
+descriptor-driven proto decode path (the transport itself is tested
+live in tests/test_source_grpc_transport.py)."""
 
 from __future__ import annotations
 
@@ -66,38 +67,6 @@ class TestProtoDecode:
 class TestGrpcRegistration:
     def test_registered_type(self):
         assert "grpc" in SOURCE_TYPES
-
-    def test_explicit_grpcio_transport_fails_fast_when_absent(self, spark):
-        """transport: grpcio (the TLS path) must fail with the install
-        hint, not fall back to cleartext h2c silently. The default
-        'auto' transport no longer gates — it falls back to the
-        jar-free h2c client (tests/test_source_grpc_transport.py runs
-        it against a live in-process server)."""
-        cfg = parse_config(
-            {
-                "sources": [
-                    {
-                        "name": "g",
-                        "type": "grpc",
-                        "url": "localhost:50051",
-                        "tables": [
-                            {
-                                "name": "t",
-                                "options": {
-                                    "method": "/pkg.Svc/List",
-                                    "fields": "1:id:int64",
-                                    "transport": "grpcio",
-                                },
-                            }
-                        ],
-                    }
-                ]
-            }
-        )
-        views = register_source(spark, cfg.sources[0])  # registration is lazy
-        assert views == ["g_t"]
-        with pytest.raises(Exception, match="grpcio is not"):
-            spark.table("g_t").collect()
 
 
 class TestIcebergRegistration:

@@ -252,6 +252,16 @@ class TestProfile:
         engine.profile("SELECT count(*) AS n FROM pr_orders")
         assert br.state == "closed"
 
+    def test_profile_logs_like_execute(self, engine):
+        """profile() leaves a query_log() entry and counts as an
+        executed query, like execute()."""
+        sql = "SELECT count(*) AS n FROM pr_orders WHERE o_orderkey > 7"
+        before = engine.metrics()["queries_executed"]
+        engine.profile(sql, user="prof")
+        assert engine.metrics()["queries_executed"] == before + 1
+        entry = engine.query_log()[-1]
+        assert (entry["query"], entry["user"], entry["cached"]) == (sql, "prof", False)
+
     def test_profile_enforces_max_output_rows(self, spark):
         import strake_spark as ss
         from strake_spark.errors import QueryRejected
